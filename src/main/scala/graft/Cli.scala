@@ -160,64 +160,25 @@ object Cli {
           s"replicas=$replicas rows=$n (x$replicas replicated)")
 
       // Routed graph walk: the query probes its R nearest cells only —
-      // partition-pruned at the file source, replica-deduped merge.
+      // partition-pruned at the file source, replica-deduped merge
+      // (R ≤ 0 or ≥ cells is the full fan-out).
       case "hnsw-search-routed" :: tablesDir :: query :: rest =>
         val topK = rest.headOption.map(_.toInt).getOrElse(10)
         val ef = rest.lift(1).map(_.toInt).getOrElse(64)
         val r = rest.lift(2).map(_.toInt).getOrElse(6)
         val view = rest.lift(3).filter(_.nonEmpty)
-        val idxPath = s"$tablesDir/embeddings_hnsw_routed"
-        val router = graft.search.Ivf.load(s"$idxPath.router.txt")
-        val index = spark.read.parquet(idxPath)
-        val dim = router.dim
-        val qvec = new OfflineEmbedder(dim).embedQuery(query)
-        val (searchable, pred) = view match {
-          case Some(v) =>
-            val meta = spark.read.parquet(s"$tablesDir/embeddings")
-              .select(col("fragment_id").as("__fid"),
-                col("view").as("__view"))
-            (index.join(meta, col("fragment_id") === col("__fid"),
-              "left"), Some(col("__view") === v))
-          case None => (index, None)
-        }
-        val hits = graft.search.Hnsw
-          .searchIndexRouted(searchable, Seq(("q", qvec)), topK, ef,
-            router, probeShards = r, predicate = pred)
-          .orderBy(col("rank"))
-          .select(col("fragment_id"), col("similarity")).collect()
-        hits.zipWithIndex.foreach { case (h, i) =>
-          println(f"#${i + 1}%-3d sim=${h.getDouble(1)}%.4f ${h.getString(0)}")
-        }
+        printSimHits(graft.search.Hnsw.serveTopK(spark, tablesDir, query,
+          topK, ef, graft.search.Hnsw.Layout.Routed(r), view = view))
 
       // Batch graph walk over the persisted adjacency table; ef = beam
-      // width (ef >= shard size degenerates to the exact scan).
+      // width (ef >= shard size degenerates to the exact scan). A view
+      // filters the walk through the metadata join.
       case "hnsw-search" :: tablesDir :: query :: rest =>
         val topK = rest.headOption.map(_.toInt).getOrElse(10)
         val ef = rest.lift(1).map(_.toInt).getOrElse(64)
         val view = rest.lift(2).filter(_.nonEmpty)
-        val index = spark.read.parquet(s"$tablesDir/embeddings_hnsw")
-        val dim = index.select(col("vector")).head()
-          .getAs[scala.collection.Seq[Float]](0).length
-        val qvec = new OfflineEmbedder(dim).embedQuery(query)
-        // filtered walk: the adjacency holds no metadata, so eligibility
-        // joins on from the source table — evaluated once per node, then
-        // the graph walk collects eligible nodes only
-        val (searchable, pred) = view match {
-          case Some(v) =>
-            val meta = spark.read.parquet(s"$tablesDir/embeddings")
-              .select(col("fragment_id").as("__fid"), col("view").as("__view"))
-            (index.join(meta, col("fragment_id") === col("__fid"), "left"),
-              Some(col("__view") === v))
-          case None => (index, None)
-        }
-        val hits = graft.search.Hnsw
-          .searchIndex(searchable, Seq(("q", qvec)), topK, ef,
-            predicate = pred)
-          .orderBy(col("rank"))
-          .select(col("fragment_id"), col("similarity")).collect()
-        hits.zipWithIndex.foreach { case (h, i) =>
-          println(f"#${i + 1}%-3d sim=${h.getDouble(1)}%.4f ${h.getString(0)}")
-        }
+        printSimHits(graft.search.Hnsw.serveTopK(spark, tablesDir, query,
+          topK, ef, graft.search.Hnsw.Layout.Flat, view = view))
 
       // Extend the persisted IVF index with PQ codes (IVFPQ): train the
       // product codebook on the same deterministic sample, add the
@@ -290,9 +251,6 @@ object Cli {
           history = history.add(Generation.Turn(q, resp.answer))
         }
 
-      // Calibrate + persist the gated-fusion confidence floor for a
-      // tables dir (the [[graft.search.FusionFloor]] sidecar). Reingest
-      // refreshes it automatically; hybrid-search refuses a stale one.
       // Build the inverted lexical postings index (term-bucket-
       // partitioned BM25 postings + exact corpus-stats sidecar) — once
       // present, hybrid-search's lexical channel is a pruned read and
@@ -311,19 +269,16 @@ object Cli {
         import graft.search.LexIndex
         require(LexIndex.exists(tablesDir),
           s"no lex index under $tablesDir — run lex-index first")
-        val st = LexIndex.loadStats(tablesDir)
-        LexIndex.requireFresh(st, tablesDir)
-        val qTerms = query.trim.split("[ \\t\\n\\f\\r]+")
-          .filter(_.nonEmpty).distinct.toSeq
-        val dfMap = LexIndex.dfOf(spark, tablesDir, qTerms)
-        val inCorpus = qTerms.filter(t => dfMap.getOrElse(t, 0L) > 0L)
-        val hits = LexIndex.scoreTopC(spark, tablesDir, inCorpus, dfMap,
-          st.n, st.sumDl.toDouble / st.n.toDouble, topK)
+        val hits = LexIndex.leg(spark, tablesDir, query, topK,
+          spark.read.parquet(s"$tablesDir/fragments")).top
         hits.zipWithIndex.foreach { case ((id, score), i) =>
           println(f"#${i + 1}%-3d bm25=$score%.4f $id")
         }
         if (hits.isEmpty) println("(no lexical matches)")
 
+      // Calibrate + persist the gated-fusion confidence floor for a
+      // tables dir (the [[graft.search.FusionFloor]] sidecar). Reingest
+      // refreshes it automatically; hybrid-search refuses a stale one.
       case "fusion-calibrate" :: tablesDir :: Nil =>
         val frags = spark.read.parquet(s"$tablesDir/fragments")
         val a = graft.search.FusionFloor.calibrate(frags, "id", "content",
@@ -654,10 +609,16 @@ object Cli {
   private[graft] final case class HybridResult(conf: Double, floor: Double,
       wLex: Double, hits: Seq[(String, Long, Long, Double)])
 
-  /** The gated hybrid serving path over a tables dir: exact BM25 over
-    * fragment content (one codegen'd scan — tf per query term via a
-    * higher-order array filter, corpus stats collected as ONE metadata
-    * row) fused with the dense KNN channel by weighted RRF under the
+  /** Candidates each channel contributes to the hybrid fusion. */
+  private val HybridC = 30
+  /** Beam width of the hybrid dense channel's graph walk. */
+  private val HybridEf = 64
+
+  /** The gated hybrid serving path over a tables dir: the lexical leg
+    * ([[graft.search.LexIndex.leg]] — exact BM25 over fragment content,
+    * through the postings index or its scan fallback) fused with the
+    * dense leg ([[graft.search.Hnsw.serveTopK]] — routed or flat graph
+    * walk, else the exact KNN scan) by weighted RRF under the
     * [[graft.search.FusionGate]] lexical-confidence gate. The floor
     * comes from the maintained sidecar and serving REFUSES a floor
     * whose corpus fingerprint no longer matches the fragments table —
@@ -666,12 +627,10 @@ object Cli {
     */
   private[graft] def hybridSearchCommand(
       spark: org.apache.spark.sql.SparkSession, tablesDir: String,
-      query: String, topK: Int, c: Int = 30,
+      query: String, topK: Int,
       view: Option[String] = None, lang: Option[String] = None,
       applySelfQuery: Boolean = true): HybridResult = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    import graft.search.{FusionFloor, FusionGate, VectorSearch}
+    import graft.search.{FusionFloor, FusionGate, Hnsw, LexIndex}
     val floorPath = s"$tablesDir/fusion_floor.txt"
     require(FusionFloor.exists(floorPath),
       s"no fusion floor at $floorPath — run fusion-calibrate (or ingest " +
@@ -702,136 +661,15 @@ object Cli {
     // sidecars fall back to the exact fingerprint pass)
     FusionFloor.requireFreshAt(art, s"$tablesDir/fragments", floorPath)(
       FusionFloor.currentFp(frags, "id", "content"))
-    // lexical channel: query terms under the same whitespace rule as
-    // calibration. With a lex_postings index present, stats come from
-    // its sidecar and df/scoring read ONLY the query terms' partition
-    // cells (a pruned read, ~|q|/256 of the index); without one, the
-    // scan fallback pays the corpus passes. Both paths are bit-for-bit
-    // equal (LexIndexSpec pins it): same integer facts, same fixed-order
-    // literal-idf fold, and both return only fragments containing ≥1
-    // in-corpus term (score > 0 strictly).
-    val qTerms = query.trim.split("[ \\t\\n\\f\\r]+")
-      .filter(_.nonEmpty).distinct.toSeq
-    import graft.search.LexIndex
-    val (n, avgdl, dfMap, scoreTopC) =
-      if (LexIndex.exists(tablesDir)) {
-        val lexSt = LexIndex.loadStats(tablesDir)
-        LexIndex.requireFresh(lexSt, tablesDir)
-        val n0 = lexSt.n
-        val avgdl0 = lexSt.sumDl.toDouble / n0.toDouble
-        val dfMap0 = LexIndex.dfOf(spark, tablesDir, qTerms)
-        val scorer = (inC: Seq[String]) =>
-          LexIndex.scoreTopC(spark, tablesDir, inC, dfMap0, n0, avgdl0, c,
-            eligible = eligibleIds)
-        (n0, avgdl0, dfMap0, scorer)
-      } else {
-        val toks = frags.select(col("id").cast("string").as("id"),
-          graft.functions.TextSketch.words(col("content")).as("w"))
-        val st = toks.agg(count(lit(1)).as("n"),
-          sum(size(col("w"))).as("sum_dl")).head()
-        val n0 = st.getLong(0)
-        val avgdl0 = st.getLong(1).toDouble / n0.toDouble
-        val dfMap0: Map[String, Long] = toks
-          .select(explode(array_distinct(col("w"))).as("t"))
-          .filter(col("t").isin(qTerms: _*))
-          .groupBy(col("t")).agg(count(lit(1)).as("df"))
-          .as[(String, Long)].collect().toMap
-        val scorer = (inC: Seq[String]) => {
-          val termScores = inC.map { t =>
-            val idfT = FusionGate.idf(dfMap0(t), n0)
-            val tf =
-              size(filter(col("w"), x => x === lit(t))).cast("double")
-            lit(idfT) * (tf * lit(FusionGate.K1 + 1)) /
-              (tf + lit(FusionGate.K1) * (lit(1 - FusionGate.B) +
-                lit(FusionGate.B) *
-                  (size(col("w")).cast("double") / lit(avgdl0))))
-          }
-          eligibleIds.fold(toks)(e => toks.join(e, Seq("id"), "left_semi"))
-            .select(col("id"), termScores.reduce(_ + _).as("bm25"))
-            .filter(col("bm25") > 0d)
-            .orderBy(col("bm25").desc, col("id")).limit(c)
-            .as[(String, Double)].collect().toSeq
-        }
-        (n0, avgdl0, dfMap0, scorer)
-      }
-    val inCorpus = qTerms.filter(t => dfMap.getOrElse(t, 0L) > 0L)
-    val lexScored: Seq[(String, Double)] =
-      if (inCorpus.isEmpty) Nil else scoreTopC(inCorpus)
-    val idfSum = inCorpus.map(t => FusionGate.idf(dfMap(t), n)).sum
-    val conf = FusionGate.confidence(
-      lexScored.headOption.map(_._2).getOrElse(0.0), idfSum)
-    val wLex = FusionGate.lexWeight(conf, art.floor)
-    // dense channel: a persisted graph index serves when one exists —
-    // the routed layout walks only its R nearest cells
-    // (spark.graft.ann.hnsw.probeCells, partition-pruned; R ≥ cells
-    // degenerates to the full fan-out THROUGH the replica-deduped
-    // routed walk), the flat layout fans out over its shards — with the
-    // exact KNN scan as the indexless fallback. Both indexes are
-    // reingest-maintained (the lex/floor consistency contract), and
-    // their own guards (router_hash, searchIndexRouted's fingerprint
-    // check) refuse torn artifacts.
-    val routedPath = s"$tablesDir/embeddings_hnsw_routed"
-    val hnswPath = s"$tablesDir/embeddings_hnsw"
-    val denseEf = 64
-    // graph walks take the predicate through a metadata join (the
-    // adjacency holds no metadata; eligibility evaluates once per node
-    // and the bounded beam accepts eligible nodes only — the
-    // hnsw-search verbs' filtered-walk contract)
-    def withViewPred(index: org.apache.spark.sql.DataFrame)
-        : (org.apache.spark.sql.DataFrame,
-           Option[org.apache.spark.sql.Column]) =
-      if (effView.isEmpty && effLang.isEmpty) (index, None)
-      else {
-        val meta = spark.read.parquet(s"$tablesDir/embeddings")
-          .select(col("fragment_id").as("__fid"),
-            col("view").as("__view"), col("lang").as("__lang"))
-        val pred = Seq(
-          effView.map(v => col("__view") === v),
-          effLang.map(l => col("__lang") === l))
-          .flatten.reduce(_ && _)
-        (index.join(meta, col("fragment_id") === col("__fid"), "left"),
-          Some(pred))
-      }
-    val vecIds: Seq[String] =
-      if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(routedPath))) {
-        val router = graft.search.Ivf.load(s"$routedPath.router.txt")
-        val qvec = new OfflineEmbedder(router.dim).embedQuery(query)
-        val r = try spark.conf.get(
-            org.apache.spark.sql.graft.HnswIndexRewrite.ProbeCellsKey,
-            org.apache.spark.sql.graft.HnswIndexRewrite
-              .DefaultProbeCells.toString).toInt
-          catch { case _: NumberFormatException =>
-            org.apache.spark.sql.graft.HnswIndexRewrite.DefaultProbeCells }
-        val (searchable, pred) =
-          withViewPred(spark.read.parquet(routedPath))
-        graft.search.Hnsw
-          .searchIndexRouted(searchable, Seq(("q", qvec)), c, denseEf,
-            router, probeShards = r, predicate = pred)
-          .orderBy(col("rank"))
-          .select(col("fragment_id")).as[String].collect().toSeq
-      } else if (java.nio.file.Files.isDirectory(
-          java.nio.file.Paths.get(hnswPath))) {
-        val index = spark.read.parquet(hnswPath)
-        val dim = index.select(col("vector")).head()
-          .getAs[scala.collection.Seq[Float]](0).length
-        val qvec = new OfflineEmbedder(dim).embedQuery(query)
-        val (searchable, pred) = withViewPred(index)
-        graft.search.Hnsw
-          .searchIndex(searchable, Seq(("q", qvec)), c, denseEf,
-            predicate = pred)
-          .orderBy(col("rank"))
-          .select(col("fragment_id")).as[String].collect().toSeq
-      } else {
-        val emb = spark.read.parquet(s"$tablesDir/embeddings")
-        val dim = emb.select(col("vector")).head()
-          .getAs[scala.collection.Seq[Float]](0).length
-        val qvec = new OfflineEmbedder(dim).embedQuery(query)
-        VectorSearch.knn(emb, qvec, c, view = effView, lang = effLang)
-          .select(col("fragment_id")).as[String].collect().toSeq
-      }
-    HybridResult(conf, art.floor, wLex,
-      FusionGate.fuseIds(lexScored.map(_._1), vecIds, wLex).take(topK))
+    val lex = LexIndex.leg(spark, tablesDir, query, HybridC, frags,
+      eligibleIds)
+    val dense = Hnsw.serveTopK(spark, tablesDir, query, HybridC, HybridEf,
+      Hnsw.layoutOf(tablesDir,
+        org.apache.spark.sql.graft.HnswIndexRewrite.probeCells(spark)),
+      effView, effLang)
+    val (conf, wLex, fused) =
+      FusionGate.gate(lex.top, lex.idfSum, dense.map(_._1), art.floor)
+    HybridResult(conf, art.floor, wLex, fused.take(topK))
   }
 
   /** Shared IVF+codes search: load quantizer + codebook sidecar, verify
@@ -880,6 +718,12 @@ object Cli {
       .collect()
     printRowHits(hits)
   }
+
+  /** (fragment_id, similarity) hit formatter for the graph walks. */
+  private def printSimHits(hits: Seq[(String, Double)]): Unit =
+    hits.zipWithIndex.foreach { case ((id, sim), i) =>
+      println(f"#${i + 1}%-3d sim=$sim%.4f $id")
+    }
 
   /** Shared (fragment_id, view, similarity) hit formatter for the ANN
     * search commands.

@@ -144,16 +144,16 @@ object StageCache {
     }
   }
 
-  /** Write a stage's rows as the persisted table [[getOrCache]] will
-    * read through to, alongside the source fingerprint that guards
-    * against serving it stale. Returns the table path.
-    */
   /** Stage columns that are partition LAYOUT, not data: a stage carrying
     * one persists as a partitioned table, so read-through consumers get
     * PartitionFilters pruning on it (the lex_inverted postings read only
     * the query terms' term_bucket cells). */
   val PartitionColumns: Seq[String] = Seq("term_bucket")
 
+  /** Write a stage's rows as the persisted table [[getOrCache]] will
+    * read through to, alongside the source fingerprint that guards
+    * against serving it stale. Returns the table path.
+    */
   def persistStage(s: SparkSession, key: String, df: DataFrame,
       root: String, fingerprint: Option[String] = None): String = {
     val dir = new java.io.File(root, sanitize(key))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.TextSketch
+import graft.search.FusionGate
 
 /** Text-analysis operators over `documents` — language ID (stopword-vote
   * heuristic), quality scoring (length/punctuation/stopword/diversity
@@ -1244,14 +1245,12 @@ object TextAnalysisQueries {
   // x22/v14/v16 read through to them instead of re-tokenizing
   // (StageCachePersistSpec pins byte-identity either way).
   private val bm25Terms = Seq("spark", "stream", "vector", "window", "join")
-  private val bm25K1 = 1.2
-  private val bm25B = 0.75
 
   /** Staleness guard for the persisted BM25 tables: corpus footprint +
     * every constant the derivation bakes in (term list, k1/b). */
   private def bm25Fingerprint(dir: String): Option[String] =
     Some(StageCache.sourceFingerprint(Seq(s"$dir/documents.parquet"),
-      s"bm25=${bm25Terms.mkString("+")},k1=$bm25K1,b=$bm25B"))
+      s"bm25=${bm25Terms.mkString("+")},k1=${FusionGate.K1},b=${FusionGate.B}"))
 
   /** The per-document posting table (doc_id, dl, tf_<term>…): one row
     * per doc with exact integer term frequencies — partitioning-
@@ -1291,34 +1290,33 @@ object TextAnalysisQueries {
     * replays it term-by-term). */
   private[queries] def bm25QueryTerms: Seq[String] = bm25Terms
 
+  /** (n, avgdl, per-term idf in [[bm25Terms]] order) off the 1-row
+    * corpus stats. Collected at query-construction time (the d13-style
+    * documented deviation) and injected as literals. Necessity, not
+    * convenience: Spark's `log` expression is StrictMath/fdlibm, which
+    * differs from libm (= DuckDB's ln) by 1 ulp on some of this corpus's
+    * df values — driver-side Math.log IS libm-equal (verified
+    * bit-for-bit), so literal idfs are what makes the oracle hash-match.
+    * When `index-sketches` has persisted the stats table this is a 1-row
+    * parquet read, not a corpus aggregate. */
+  private def bm25Facts(s: SparkSession, dir: String)
+      : (Long, Double, Seq[Double]) = {
+    val st = bm25StatsRow(s, dir)
+    val n = st.getAs[Long]("n")
+    (n, st.getAs[Long]("sum_dl").toDouble / n.toDouble,
+      bm25Terms.map(t => FusionGate.idf(
+        st.getAs[Long](s"df_$t"), n)))
+  }
+
   /** Full-corpus BM25 scores (doc_id, dl, bm25) — shared by x22's top-10
     * and v14/v16's hybrid fusion. */
   private[queries] def bm25ScoredAll(s: SparkSession, dir: String): DataFrame = {
-    val perDoc = bm25PerDoc(s, dir)
-    // corpus stats are ONE row of metadata: collect at query-construction
-    // time (the d13-style documented deviation) and inject idf/avgdl as
-    // literals. Necessity, not convenience: Spark's `log` expression is
-    // StrictMath/fdlibm, which differs from libm (= DuckDB's ln) by 1 ulp
-    // on some of this corpus's df values — driver-side Math.log IS libm-
-    // equal (verified bit-for-bit), so literal idfs are what makes the
-    // oracle hash-match. When `index-sketches` has persisted the stats
-    // table this head() is a 1-row parquet read, not a corpus aggregate.
-    val st = bm25StatsRow(s, dir)
-    val n = st.getAs[Long]("n")
-    val avgdl = st.getAs[Long]("sum_dl").toDouble / n.toDouble
-    val idfs: Seq[Double] = bm25Terms.map { t =>
-      val df = st.getAs[Long](s"df_$t").toDouble
-      math.log((n.toDouble - df + 0.5) / (df + 0.5) + 1.0)
-    }
-    val termScores: Seq[Column] = bm25Terms.zip(idfs).map { case (t, idf) =>
-      val tf = col(s"tf_$t").cast("double")
-      lit(idf) * (tf * lit(bm25K1 + 1)) /
-        (tf + lit(bm25K1) *
-          (lit(1 - bm25B) + lit(bm25B) * (col("dl").cast("double") / lit(avgdl))))
-    }
-    perDoc
-      .select(col("doc_id"), col("dl"),
-        termScores.reduce(_ + _).as("bm25"))
+    val (_, avgdl, idfs) = bm25Facts(s, dir)
+    bm25PerDoc(s, dir)
+      .select(col("doc_id"), col("dl"), bm25Terms.zip(idfs).map {
+        case (t, idf) => FusionGate.bm25TermCol(
+          col(s"tf_$t"), idf, col("dl"), avgdl)
+      }.reduce(_ + _).as("bm25"))
   }
 
   private val x22Bm25: Q = (s, dir) =>
@@ -1336,8 +1334,9 @@ object TextAnalysisQueries {
       s"SUM(CASE WHEN tf_$t > 0 THEN 1 ELSE 0 END)::BIGINT AS df_$t").mkString(",\n       |    ")
     val scores = bm25Terms.map { t =>
       s"(ln((n::DOUBLE - df_$t::DOUBLE + 0.5) / (df_$t::DOUBLE + 0.5) + 1.0) * " +
-        s"(tf_$t::DOUBLE * ${bm25K1 + 1}) / " +
-        s"(tf_$t::DOUBLE + $bm25K1 * (${1 - bm25B} + $bm25B * (dl::DOUBLE / avgdl))))"
+        s"(tf_$t::DOUBLE * ${FusionGate.K1 + 1}) / " +
+        s"(tf_$t::DOUBLE + ${FusionGate.K1} * (${1 - FusionGate.B} + " +
+        s"${FusionGate.B} * (dl::DOUBLE / avgdl))))"
     }.mkString("\n       |    + ")
     s"""SELECT doc_id, dl,
        |    $scores AS bm25
@@ -1408,33 +1407,12 @@ object TextAnalysisQueries {
   private def lexPrunedTop10(s: SparkSession, dir: String,
       eligible: Option[DataFrame]): DataFrame = {
     import graft.search.LexIndex
-    val st = bm25StatsRow(s, dir)
-    val n = st.getAs[Long]("n")
-    val avgdl = st.getAs[Long]("sum_dl").toDouble / n.toDouble
-    val idfs: Seq[Double] = bm25Terms.map { t =>
-      val df = st.getAs[Long](s"df_$t").toDouble
-      math.log((n.toDouble - df + 0.5) / (df + 0.5) + 1.0)
-    }
+    val (_, avgdl, idfs) = bm25Facts(s, dir)
     val buckets = bm25Terms.map(LexIndex.bucketOf).distinct
-    val pruned0 = lexInvertedStage(s, dir)
+    val pruned = lexInvertedStage(s, dir)
       .filter(col("term_bucket").isin(buckets: _*))
       .filter(col("term").isin(bm25Terms: _*))
-    val pruned = eligible.fold(pruned0)(e =>
-      pruned0.join(e.select(col("doc_id")), Seq("doc_id"), "left_semi"))
-    val tfCols = bm25Terms.map(t =>
-      sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$t"))
-    val perDoc = pruned.groupBy(col("doc_id"), col("dl"))
-      .agg(tfCols.head, tfCols.tail: _*)
-    val termScores: Seq[Column] = bm25Terms.zip(idfs).map { case (t, idf) =>
-      val tf = col(s"tf_$t").cast("double")
-      lit(idf) * (tf * lit(bm25K1 + 1)) /
-        (tf + lit(bm25K1) *
-          (lit(1 - bm25B) + lit(bm25B) *
-            (col("dl").cast("double") / lit(avgdl))))
-    }
-    perDoc
-      .select(col("doc_id"), col("dl"),
-        termScores.reduce(_ + _).as("bm25"))
+    LexIndex.bm25Of(pruned, "doc_id", eligible, bm25Terms, idfs, avgdl)
       .orderBy(col("bm25").desc, col("doc_id")).limit(10)
   }
 

@@ -705,16 +705,9 @@ object VectorQueries {
       hybridCosAll(s, dir)
         .orderBy(col("cos").desc, col("doc_id"))
         .limit(c).select(col("doc_id").cast("long")).as[Long].collect())
-    val rLex = lexIds.zipWithIndex.map { case (d, i) => d -> (i + 1L) }.toMap
-    val rVec = vecIds.zipWithIndex.map { case (d, i) => d -> (i + 1L) }.toMap
-    val fused = (lexIds ++ vecIds).distinct.toSeq.map { d =>
-      val rl = rLex.getOrElse(d, -1L)
-      val rv = rVec.getOrElse(d, -1L)
-      val rrf = (if (rl > 0) 1.0 / (60.0 + rl.toDouble) else 0.0) +
-        (if (rv > 0) 1.0 / (60.0 + rv.toDouble) else 0.0)
-      (d, rl, rv, rrf)
-    }.sortBy { case (d, _, _, rrf) => (-rrf, d) }.take(10)
-    fused.toDF("doc_id", "r_lex", "r_vec", "rrf")
+    // unweighted RRF: the gate's fuse at neutral lexical weight
+    graft.search.FusionGate.fuseIds(lexIds.toSeq, vecIds.toSeq, 1.0)
+      .take(10).toDF("doc_id", "r_lex", "r_vec", "rrf")
       .orderBy(col("rrf").desc, col("doc_id"))
   }
 
@@ -777,11 +770,6 @@ object VectorQueries {
   private def fusionCorpusFp(n: Long, sumDl: Long): Long =
     n * 1000000007L + sumDl
 
-  /** Calibrates the lexical-confidence floor for this corpus and
-    * persists it as the write-time artifact; returns (corpus_fp, floor).
-    * Session-cached (StageCache): the bounded sample + census scan run
-    * once per session, not once per query invocation.
-    */
   /** Staleness guard for the persisted fusion-floor table: corpus
     * footprint + every calibration constant. One derivation shared by
     * the reader below and [[WriteTimeTables.persistAll]]'s writer (the
@@ -793,6 +781,11 @@ object VectorQueries {
         s"q${graft.search.FusionGate.FloorQuantile}," +
         s"thin${graft.search.FusionGate.ThinStride},ord=md5")
 
+  /** Calibrates the lexical-confidence floor for this corpus and
+    * persists it as the write-time artifact; returns (corpus_fp, floor).
+    * Session-cached (StageCache): the bounded sample + census scan run
+    * once per session, not once per query invocation.
+    */
   private[graft] def fusionFloorCalib(s: SparkSession, dir: String)
       : (Long, Double) = {
     // getOrCache reads through to the write-time `fusion_floor` table
@@ -883,12 +876,10 @@ object VectorQueries {
         .orderBy(col("cos").desc, col("doc_id"))
         .limit(c).select(col("doc_id").cast("long")).as[Long].collect())
     val floor = floorPair._2
-    val conf = FusionGate.confidence(
-      lexScored.headOption.map(_._2).getOrElse(0.0), idfSum)
-    val wLex = FusionGate.lexWeight(conf, floor)
-    val fused = FusionGate.fuse(lexScored.map(_._1).toSeq, vecIds.toSeq,
-      wLex).take(10)
-    fused.map { case (d, rl, rv, sc) => (d, rl, rv, conf, floor, wLex, sc) }
+    val (conf, wLex, fused) =
+      FusionGate.gate(lexScored.toSeq, idfSum, vecIds.toSeq, floor)
+    fused.take(10)
+      .map { case (d, rl, rv, sc) => (d, rl, rv, conf, floor, wLex, sc) }
       .toDF("doc_id", "r_lex", "r_vec", "conf", "floor", "w_lex", "score")
       .orderBy(col("score").desc, col("doc_id"))
   }

@@ -1,5 +1,8 @@
 package graft.search
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
+
 /** Score-aware gating for hybrid (lexical ⊕ dense) RRF fusion — VERDICT
   * r13 task 1. Unweighted RRF has a known failure mode: when one
   * retriever fails DEPENDENTLY (its top list is confidently wrong, not
@@ -73,6 +76,18 @@ object FusionGate {
     idfT * tf * (K1 + 1) /
       (tf + K1 * ((1 - B) + B * (dl.toDouble / avgdl)))
 
+  /** [[bm25Term]] as a Spark expression over integer `tf`/`dl` columns
+    * with the term's idf and avgdl as driver literals (Spark's `log` is
+    * not libm-equal; literal idfs keep the DuckDB oracle bit-exact) —
+    * the one expression every BM25 scorer over a Spark plan folds. */
+  def bm25TermCol(tf: Column, idfT: Double, dl: Column, avgdl: Double)
+      : Column = {
+    val tfD = tf.cast("double")
+    lit(idfT) * (tfD * lit(K1 + 1)) /
+      (tfD + lit(K1) * (lit(1 - B) + lit(B) *
+        (dl.cast("double") / lit(avgdl))))
+  }
+
   /** Lexical confidence: achieved top score over the saturation ceiling
     * `(k1+1) · Σ idf`. idfSum must be folded in a deterministic term
     * order by the caller. */
@@ -116,12 +131,8 @@ object FusionGate {
   /** Weighted RRF over two candidate id lists (the serving-time merge —
     * ≤ 2C driver-side rows, the v16 contract). Returns every candidate
     * as (id, r_lex, r_vec, score), score-descending with id tie-break;
-    * sentinel rank −1 marks absence from a side. */
-  def fuse(lex: Seq[Long], dense: Seq[Long], wLex: Double)
-      : Seq[(Long, Long, Long, Double)] = fuseIds(lex, dense, wLex)
-
-  /** [[fuse]] over any ordered id type (string fragment ids in the
-    * Cli's hybrid-search serving path; longs in the v24 catalog). */
+    * sentinel rank −1 marks absence from a side. Any ordered id type:
+    * string fragment ids when serving a tables dir, longs in v24. */
   def fuseIds[A](lex: Seq[A], dense: Seq[A], wLex: Double)(
       implicit ord: Ordering[A]): Seq[(A, Long, Long, Double)] = {
     val rLex = lex.zipWithIndex.map { case (d, i) => d -> (i + 1L) }.toMap
@@ -134,5 +145,17 @@ object FusionGate {
       (d, rl, rv, sc)
     }.sortBy { case (d, _, _, s) => (s, d) }(
       Ordering.Tuple2(Ordering.Double.TotalOrdering.reverse, ord))
+  }
+
+  /** The gate step shared by every hybrid serve: the lexical top-c's
+    * confidence (its best score over the `idfSum` ceiling) → the lexical
+    * weight under `floor` → weighted RRF with the dense ids. Returns
+    * (conf, wLex, fused). */
+  def gate[A](lex: Seq[(A, Double)], idfSum: Double, dense: Seq[A],
+      floor: Double)(implicit ord: Ordering[A])
+      : (Double, Double, Seq[(A, Long, Long, Double)]) = {
+    val conf = confidence(lex.headOption.map(_._2).getOrElse(0.0), idfSum)
+    val wLex = lexWeight(conf, floor)
+    (conf, wLex, fuseIds(lex.map(_._1), dense, wLex))
   }
 }

@@ -884,6 +884,95 @@ object Hnsw {
       routes = Some(routes))
   }
 
+  /** The graph walk over an adjacency table — the one routed-or-flat
+    * dispatch. With a router the walk probes the query's `probeCells`
+    * nearest cells, and `probeCells ≤ 0` or `≥ router.k` is the full
+    * fan-out (the [[org.apache.spark.sql.graft.HnswIndexRewrite.ProbeCellsKey]]
+    * contract) — still THROUGH the routed walk, because a routed table
+    * may be replicated and the plain walk would return each replica as
+    * its own hit. Without one, every shard answers. */
+  def searchLayout(index: DataFrame, queries: Seq[(String, Array[Float])],
+      topK: Int, ef: Int, router: Option[Ivf.Quantizer], probeCells: Int,
+      idCol: String = "fragment_id",
+      predicate: Option[Column] = None): DataFrame = router match {
+    case Some(r) => searchIndexRouted(index, queries, topK, ef, r,
+      cellsProbed(probeCells, r), idCol, predicate)
+    case None => searchIndex(index, queries, topK, ef, idCol, predicate)
+  }
+
+  /** Cells a routed walk probes for a requested `probeCells`. */
+  def cellsProbed(probeCells: Int, router: Ivf.Quantizer): Int =
+    if (probeCells <= 0) router.k else math.min(probeCells, router.k)
+
+  /** Where a tables dir's dense channel serves from. */
+  sealed trait Layout
+  object Layout {
+    /** `embeddings_hnsw_routed`, walking `probeCells` cells per query. */
+    final case class Routed(probeCells: Int) extends Layout
+    /** `embeddings_hnsw`, every shard walked. */
+    case object Flat extends Layout
+    /** No graph index: the exact KNN scan of `embeddings`. */
+    case object Exact extends Layout
+  }
+
+  val RoutedDir = "embeddings_hnsw_routed"
+  val FlatDir = "embeddings_hnsw"
+
+  /** The preferred layout present under a tables dir: routed, then flat,
+    * then the exact scan. */
+  def layoutOf(tablesDir: String, probeCells: Int): Layout = {
+    def has(d: String) =
+      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$tablesDir/$d"))
+    if (has(RoutedDir)) Layout.Routed(probeCells)
+    else if (has(FlatDir)) Layout.Flat
+    else Layout.Exact
+  }
+
+  /** The dense leg of serving a tables dir: the query embedded at the
+    * layout's dimension, its top-`k` `(fragment_id, similarity)` in rank
+    * order. A view/lang scope filters BEFORE rank on every layout: the
+    * exact scan filters its rows; the adjacency holds no metadata, so
+    * the walk LEFT-joins view/lang on from `embeddings` (every node
+    * stays for navigation, eligibility evaluates once per node, a
+    * missing value is not eligible) and collects eligible nodes only.
+    * Both indexes are reingest-maintained, and their own guards
+    * (router_hash, the routed walk's fingerprint check) refuse torn
+    * artifacts. */
+  def serveTopK(spark: SparkSession, tablesDir: String, query: String,
+      k: Int, ef: Int, layout: Layout, view: Option[String] = None,
+      lang: Option[String] = None): Seq[(String, Double)] = {
+    import spark.implicits._
+    def embed(dim: Int) =
+      new graft.embedding.OfflineEmbedder(dim).embedQuery(query)
+    def dimOf(df: DataFrame) = df.select(col("vector")).head()
+      .getAs[scala.collection.Seq[Float]](0).length
+    def walk(path: String, router: Option[Ivf.Quantizer], cells: Int) = {
+      val index = spark.read.parquet(path)
+      val qvec = embed(router.fold(dimOf(index))(_.dim))
+      val pred = Seq(view.map(v => col("__view") === v),
+        lang.map(l => col("__lang") === l)).flatten.reduceOption(_ && _)
+      val searchable = pred.fold(index) { _ =>
+        val meta = spark.read.parquet(s"$tablesDir/embeddings")
+          .select(col("fragment_id").as("__fid"),
+            col("view").as("__view"), col("lang").as("__lang"))
+        index.join(meta, col("fragment_id") === col("__fid"), "left")
+      }
+      searchLayout(searchable, Seq(("q", qvec)), k, ef, router, cells,
+        predicate = pred).orderBy(col("rank"))
+    }
+    val hits = layout match {
+      case Layout.Routed(cells) =>
+        val path = s"$tablesDir/$RoutedDir"
+        walk(path, Some(Ivf.load(s"$path.router.txt")), cells)
+      case Layout.Flat => walk(s"$tablesDir/$FlatDir", None, 0)
+      case Layout.Exact =>
+        val emb = spark.read.parquet(s"$tablesDir/embeddings")
+        VectorSearch.knn(emb, embed(dimOf(emb)), k, view = view, lang = lang)
+    }
+    hits.select(col("fragment_id"), col("similarity"))
+      .as[(String, Double)].collect().toSeq
+  }
+
   private def searchIndexCore(index: DataFrame,
       queries: Seq[(String, Array[Float])], topK: Int, ef: Int,
       idCol: String, predicate: Option[Column],

@@ -562,13 +562,95 @@ object LexIndex {
   def ubOf(dfT: Long, n: Long): Double =
     FusionGate.idf(dfT, n) * (FusionGate.K1 + 1)
 
-  /** BM25 top-`c` over the pruned postings — bit-for-bit the scan
-    * path's scores: per-fragment term contributions pivot out of the
-    * postings (`sum(when(term = t, tf) else 0)` is the exact integer
-    * the scan path's array filter counts) and fold in the caller's
-    * fixed `inCorpus` term order with the same literal-idf expression.
-    * Only fragments containing ≥1 query term can appear (score > 0
-    * strictly — idf > 0 always holds for Okapi's +1 form).
+  /** BM25 scores `(<idCol>, dl, bm25)` over a `(term, <idCol>, dl, tf)`
+    * postings frame — the one tf pivot every postings scorer shares
+    * (`sum(when(term = t, tf) else 0)` is the exact integer the scan
+    * path's array filter counts), folded in the caller's fixed `terms`
+    * order with literal `idfs` ([[FusionGate.bm25TermCol]]). Metadata
+    * scoping is FILTER-BEFORE-RANK (the F1/F2 contract): `eligible` (a
+    * one-column `<idCol>` set, e.g. the fragments of one view)
+    * semi-joins into the postings before any score or limit, while
+    * df/n/avgdl stay GLOBAL — the Postgres FTS-with-WHERE semantics the
+    * reference pairs pgvector with: the predicate restricts candidates,
+    * not the language model. */
+  def bm25Of(postings: DataFrame, idCol: String,
+      eligible: Option[DataFrame], terms: Seq[String], idfs: Seq[Double],
+      avgdl: Double): DataFrame = {
+    val scoped = eligible.fold(postings)(e =>
+      postings.join(e.select(col(idCol)), Seq(idCol), "left_semi"))
+    val tfCols = terms.zipWithIndex.map { case (t, i) =>
+      sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
+    }
+    scoped.groupBy(col(idCol), col("dl")).agg(tfCols.head, tfCols.tail: _*)
+      .select(col(idCol), col("dl"), idfs.zipWithIndex.map { case (idf, i) =>
+        FusionGate.bm25TermCol(col(s"tf_$i"), idf, col("dl"), avgdl)
+      }.reduce(_ + _).as("bm25"))
+  }
+
+  /** One query's lexical leg over a tables dir: corpus size `n`, the
+    * query terms' df, the in-corpus terms in query order and the BM25
+    * top-c (score > 0 strictly). */
+  final case class Leg(n: Long, df: Map[String, Long],
+      inCorpus: Seq[String], top: Seq[(String, Double)]) {
+    /** Σ idf over the in-corpus terms in query order — the confidence
+      * ceiling's fold ([[FusionGate.confidence]]). */
+    def idfSum: Double = inCorpus.map(t => FusionGate.idf(df(t), n)).sum
+  }
+
+  /** The lexical leg of serving a tables dir. The query's terms are its
+    * distinct whitespace-split tokens (calibration's rule). With the
+    * index present, stats come from its sidecar (hard-erroring when
+    * stale) and df/scoring read ONLY the query terms' partition cells;
+    * without one, the scan fallback tokenizes `frags` (read only then)
+    * and pays the corpus passes. Both routes are bit-for-bit equal
+    * (LexIndexSpec pins it): same integer facts, same fixed-order
+    * literal-idf fold. `eligible` scopes candidates (an "id" set), never
+    * the statistics. */
+  def leg(spark: SparkSession, tablesDir: String, query: String, c: Int,
+      frags: => DataFrame, eligible: Option[DataFrame] = None): Leg = {
+    import spark.implicits._
+    val qTerms = query.trim.split("[ \\t\\n\\f\\r]+")
+      .filter(_.nonEmpty).distinct.toSeq
+    def inCorpusOf(df: Map[String, Long]) =
+      qTerms.filter(t => df.getOrElse(t, 0L) > 0L)
+    if (exists(tablesDir)) {
+      val st = loadStats(tablesDir)
+      requireFresh(st, tablesDir)
+      val df = dfOf(spark, tablesDir, qTerms)
+      val inCorpus = inCorpusOf(df)
+      Leg(st.n, df, inCorpus, scoreTopC(spark, tablesDir, inCorpus, df,
+        st.n, st.sumDl.toDouble / st.n.toDouble, c, eligible))
+    } else {
+      val toks = frags.select(col("id").cast("string").as("id"),
+        graft.functions.TextSketch.words(col("content")).as("w"))
+      val st = toks.agg(count(lit(1)).as("n"),
+        sum(size(col("w"))).as("sum_dl")).head()
+      val n = st.getLong(0)
+      val avgdl = st.getLong(1).toDouble / n.toDouble
+      val df: Map[String, Long] = toks
+        .select(explode(array_distinct(col("w"))).as("t"))
+        .filter(col("t").isin(qTerms: _*))
+        .groupBy(col("t")).agg(count(lit(1)).as("df"))
+        .as[(String, Long)].collect().toMap
+      val inCorpus = inCorpusOf(df)
+      val top =
+        if (inCorpus.isEmpty) Nil
+        else eligible.fold(toks)(e => toks.join(e, Seq("id"), "left_semi"))
+          .select(col("id"), inCorpus.map { t =>
+            FusionGate.bm25TermCol(size(filter(col("w"), x => x === lit(t))),
+              FusionGate.idf(df(t), n), size(col("w")), avgdl)
+          }.reduce(_ + _).as("bm25"))
+          .filter(col("bm25") > 0d)
+          .orderBy(col("bm25").desc, col("id")).limit(c)
+          .as[(String, Double)].collect().toSeq
+      Leg(n, df, inCorpus, top)
+    }
+  }
+
+  /** BM25 top-`c` over the pruned postings ([[bm25Of]]) — bit-for-bit
+    * the scan path's scores. Only fragments containing ≥1 query term
+    * can appear (score > 0 strictly — idf > 0 always holds for Okapi's
+    * +1 form).
     *
     * Stopword-bearing queries take a MaxScore-bounded route (Turtle &
     * Flood's upper-bound pruning, the batch shape of Lucene's
@@ -621,15 +703,7 @@ object LexIndex {
       avgdl: Double, c: Int, eligible: Option[DataFrame],
       restrictTo: Option[Seq[String]]): Seq[(String, Double)] = {
     import spark.implicits._
-    // metadata scoping is FILTER-BEFORE-RANK (the F1/F2 contract):
-    // `eligible` (a one-column "id" set, e.g. fragments of one view)
-    // semi-joins into the pruned postings before any score or limit.
-    // Corpus statistics (df/n/avgdl) stay GLOBAL — the Postgres
-    // FTS-with-WHERE semantics the reference pairs pgvector with: the
-    // predicate restricts candidates, not the language model.
     val pruned0 = prunedPostings(spark, tablesDir, inCorpus)
-    val pruned1 = eligible.fold(pruned0)(e =>
-      pruned0.join(e.select(col("id")), Seq("id"), "left_semi"))
     // candidate restriction (the MaxScore route): an IN predicate the
     // scan pushes into the (term, id)-sorted row groups/pages — a
     // candidate's rows sit in one id run per term, so parquet stats
@@ -637,24 +711,11 @@ object LexIndex {
     // parquet.pushdown.inFilterThreshold into a min/max range (useless
     // over ids spanning the corpus), so the threshold is raised past
     // the candidate cap for this one read.
-    val pruned = restrictTo.fold(pruned1)(ids =>
-      pruned1.filter(col("id").isin(ids: _*)))
-    val tfCols: Seq[Column] = inCorpus.zipWithIndex.map { case (t, i) =>
-      sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
-    }
-    val perFrag = pruned.groupBy(col("id"), col("dl")).agg(
-      tfCols.head, tfCols.tail: _*)
-    val termScores: Seq[Column] = inCorpus.zipWithIndex.map {
-      case (t, i) =>
-        val idfT = FusionGate.idf(dfMap(t), n)
-        val tf = col(s"tf_$i").cast("double")
-        lit(idfT) * (tf * lit(FusionGate.K1 + 1)) /
-          (tf + lit(FusionGate.K1) * (lit(1 - FusionGate.B) +
-            lit(FusionGate.B) *
-              (col("dl").cast("double") / lit(avgdl))))
-    }
-    val top = perFrag
-      .select(col("id"), termScores.reduce(_ + _).as("bm25"))
+    val pruned = restrictTo.fold(pruned0)(ids =>
+      pruned0.filter(col("id").isin(ids: _*)))
+    val top = bm25Of(pruned, "id", eligible, inCorpus,
+        inCorpus.map(t => FusionGate.idf(dfMap(t), n)), avgdl)
+      .select(col("id"), col("bm25"))
       .orderBy(col("bm25").desc, col("id")).limit(c)
     if (restrictTo.isEmpty) top.as[(String, Double)].collect().toSeq
     else withInThreshold(spark,
@@ -695,29 +756,14 @@ object LexIndex {
     // tf/dl) and a tie cohort straddling the threshold must fit or the
     // route valves
     val candCap = math.max(32 * c, 2048)
-    val prunedR0 = prunedPostings(spark, tablesDir, rare)
-    val prunedR = eligible.fold(prunedR0)(e =>
-      prunedR0.join(e.select(col("id")), Seq("id"), "left_semi"))
-    val tfColsR: Seq[Column] = rare.zipWithIndex.map { case (t, i) =>
-      sum(when(col("term") === t, col("tf")).otherwise(0L)).as(s"tf_$i")
-    }
-    val perFragR = prunedR.groupBy(col("id"), col("dl")).agg(
-      tfColsR.head, tfColsR.tail: _*)
-    val termScoresR: Seq[Column] = rare.zipWithIndex.map { case (t, i) =>
-      val idfT = FusionGate.idf(dfMap(t), n)
-      val tf = col(s"tf_$i").cast("double")
-      lit(idfT) * (tf * lit(FusionGate.K1 + 1)) /
-        (tf + lit(FusionGate.K1) * (lit(1 - FusionGate.B) +
-          lit(FusionGate.B) *
-            (col("dl").cast("double") / lit(avgdl))))
-    }
     // ONE job yields the c-th rare score AND the candidate set: every
     // candidate (rbm25 > thr, thr < mC) outranks the threshold, so all
     // of them sit inside the top-(cap+1) rows; a (cap+1)-th row still
     // above thr means the tie cohort overflows the cap → valve
-    val top = perFragR
-      .select(col("id"), termScoresR.reduce(_ + _).as("rbm25"))
-      .orderBy(col("rbm25").desc, col("id")).limit(candCap + 1)
+    val top = bm25Of(prunedPostings(spark, tablesDir, rare), "id",
+        eligible, rare, rare.map(t => FusionGate.idf(dfMap(t), n)), avgdl)
+      .select(col("id"), col("bm25"))
+      .orderBy(col("bm25").desc, col("id")).limit(candCap + 1)
       .as[(String, Double)].collect()
     // fewer than c rare-scored docs: common-only docs could fill the
     // tail and the bound says nothing about which — no certification

@@ -267,33 +267,21 @@ case class HnswIndexRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // probeCells nearest cells instead of fanning out to every shard
       // — at 800 shards the all-shard fan-out is exactly the wave-bound
       // walk the routed layout was built to kill, and serving through
-      // this rule must not re-create it. probeCells ≥ router.k (or a
-      // non-positive conf) degenerates to the full fan-out; the stamped
-      // router_hash guard rides inside searchIndexRouted.
+      // this rule must not re-create it. The stamped router_hash guard
+      // rides inside searchIndexRouted.
       val routerPath = s"$path.router.txt"
       val router =
         if (new java.io.File(routerPath).isFile)
           Some(graft.search.Ivf.load(routerPath))
         else None
-      val probeCells =
-        try spark.conf.get(ProbeCellsKey, DefaultProbeCells.toString).toInt
-        catch { case _: NumberFormatException => DefaultProbeCells }
+      val cells = probeCells(spark)
       logInfo(s"HNSW rewrite: serving top-$k (ef=$ef" +
         predOpt.map(_ => ", filtered").getOrElse("") +
-        router.map(r => s", routed R=${math.min(probeCells, r.k)}/${r.k}")
+        router.map(r =>
+          s", routed R=${graft.search.Hnsw.cellsProbed(cells, r)}/${r.k}")
           .getOrElse("") + s") from $path")
-      val hits = router match {
-        case Some(r) =>
-          // a routed table may be REPLICATED, so even the full fan-out
-          // (probeCells ≤ 0 or ≥ k) must go through the routed walk —
-          // plain searchIndex would return each replica as its own hit
-          val cells =
-            if (probeCells <= 0) r.k else math.min(probeCells, r.k)
-          graft.search.Hnsw.searchIndexRouted(enriched, Seq(("q", qv)),
-            k, ef, r, cells, idCol, predOpt)
-        case None => graft.search.Hnsw.searchIndex(
-          enriched, Seq(("q", qv)), k, ef, idCol, predOpt)
-      }
+      val hits = graft.search.Hnsw.searchLayout(enriched, Seq(("q", qv)),
+        k, ef, router, cells, idCol, predOpt)
       // index↔table binding: post-r11 index tables stamp vec_hash per
       // node (the raw source vector's content hash), and searchIndex
       // emits it beside each hit FROM THE ROWS THE WALK ALREADY READ —
@@ -404,6 +392,12 @@ object HnswIndexRewrite {
     * knob (R=6 at replicas=3). */
   val ProbeCellsKey = "spark.graft.ann.hnsw.probeCells"
   val DefaultProbeCells = 6
+
+  /** [[ProbeCellsKey]] as set on the session (unparseable ⇒ default);
+    * [[graft.search.Hnsw.cellsProbed]] clamps it against the router. */
+  def probeCells(spark: SparkSession): Int =
+    try spark.conf.get(ProbeCellsKey, DefaultProbeCells.toString).toInt
+    catch { case _: NumberFormatException => DefaultProbeCells }
 
   private val MetaIdCol = "__graft_hnsw_meta_id"
   private val MetaCol = "__graft_hnsw_meta_"

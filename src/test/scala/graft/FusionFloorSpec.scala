@@ -159,10 +159,23 @@ class FusionFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
       "echo document about spark shuffles and partition pruning together")
     val fb = writeDoc("f.txt",
       "golf document about vector recall and graph index maintenance")
-    ingestTables(td, List(fa, fb), engine)
+    // a code fence gives the corpus a second view to scope to
+    val fc = writeDoc("g.md",
+      "# Hotel\n\nhotel notes about vector recall in graph walks.\n\n" +
+        "```python\ndef vector_recall(graph):\n    return graph.walk()\n```\n")
+    ingestTables(td, List(fa, fb, fc), engine)
     calibrateAt(td)
     val query = "vector recall"
-    val exact = Cli.hybridSearchCommand(spark, td, query, 5)
+    // inputs: unscoped, and scoped to one view — the graph walks take
+    // the predicate through the metadata join, the exact scan filters
+    val fragsDf = spark.read.parquet(s"$td/fragments")
+    val v = fragsDf.select("view").distinct()
+      .collect().map(_.getString(0)).sorted.head
+    assert(fragsDf.filter(col("view") =!= v).count() > 0L,
+      "fixture must yield fragments outside the scoped view")
+    val views = Seq(None, Some(v))
+    val exact = views.map(vw =>
+      vw -> Cli.hybridSearchCommand(spark, td, query, 5, view = vw))
 
     // flat graph index: ef(64) >= corpus size here, so the walk is
     // exhaustive and the hybrid result is bit-identical
@@ -170,26 +183,32 @@ class FusionFloorSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.search.HnswMaintenance.writeIndex(
       e, s"$td/embeddings_hnsw", numShards = 2,
       docCol = Some("document_id"))
-    val viaFlat = Cli.hybridSearchCommand(spark, td, query, 5)
-    assert(viaFlat == exact,
-      s"flat-index dense channel diverged:\n$viaFlat\nvs\n$exact")
+    exact.foreach { case (vw, ex) =>
+      val viaFlat = Cli.hybridSearchCommand(spark, td, query, 5, view = vw)
+      assert(viaFlat == ex,
+        s"flat-index dense channel diverged (view=$vw):\n$viaFlat\nvs\n$ex")
+    }
 
-    // routed graph index takes precedence; probeCells = cells is the
-    // full fan-out THROUGH the replica-deduped routed walk -> identical
+    // routed graph index takes precedence; probeCells = cells, and a
+    // non-positive value (the key's full fan-out), go THROUGH the
+    // replica-deduped routed walk over every cell -> identical
     val sample = e.select(col("vector")).collect()
       .map(_.getAs[scala.collection.Seq[Float]](0).toArray)
     val router = graft.search.Ivf.train(sample, 2)
     graft.search.HnswMaintenance.writeIndexRouted(
       e.drop("doc_bucket"), s"$td/embeddings_hnsw_routed", router,
       replicas = 1, docCol = Some("document_id"))
-    spark.conf.set(
-      org.apache.spark.sql.graft.HnswIndexRewrite.ProbeCellsKey, "2")
-    try {
-      val viaRouted = Cli.hybridSearchCommand(spark, td, query, 5)
-      assert(viaRouted == exact,
-        s"routed-index dense channel diverged:\n$viaRouted\nvs\n$exact")
-    } finally spark.conf.unset(
-      org.apache.spark.sql.graft.HnswIndexRewrite.ProbeCellsKey)
+    for (cells <- Seq("2", "0"); (vw, ex) <- exact) {
+      spark.conf.set(
+        org.apache.spark.sql.graft.HnswIndexRewrite.ProbeCellsKey, cells)
+      try {
+        val viaRouted = Cli.hybridSearchCommand(spark, td, query, 5,
+          view = vw)
+        assert(viaRouted == ex, s"routed-index dense channel diverged " +
+          s"(probeCells=$cells, view=$vw):\n$viaRouted\nvs\n$ex")
+      } finally spark.conf.unset(
+        org.apache.spark.sql.graft.HnswIndexRewrite.ProbeCellsKey)
+    }
   }
 
   private def calibrateAt(td: String): Unit = {

@@ -88,7 +88,7 @@ class FusionGateSpec extends AnyFunSuite with BeforeAndAfterAll {
     // weight 0 degrades to the dense ranking exactly
     val dense = (1 to 10).map(_.toLong)
     val lex = Seq(100L, 101L, 102L)
-    val fused0 = FusionGate.fuse(lex, dense, 0.0).take(10).map(_._1)
+    val fused0 = FusionGate.fuseIds(lex, dense, 0.0).take(10).map(_._1)
     assert(fused0 == dense)
   }
 
