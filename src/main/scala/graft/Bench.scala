@@ -498,8 +498,6 @@ object Bench {
         // regressions (or intended changes), never host noise
         VolumeGate.gateJson(volMain.toMap, sfDir) +
         s""","peak_storage_bytes":$peakStorage""" +
-        s""","storage_level":${jstr(spark.conf.get(
-          graft.queries.StageCache.StorageLevelConf, "MEMORY_AND_DISK"))}""" +
         filterSpec.map(f => s""","filter":${jstr(f)}""").getOrElse("")
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",$meta}"""

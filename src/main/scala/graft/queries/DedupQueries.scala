@@ -239,7 +239,9 @@ object DedupQueries {
   /** Per-dir record of what the last d7/d8 component run actually did
     * (pair volume, driver-vs-distributed path, rounds) — the soak stamps
     * it into SOAK_r{N} so superlinear d7/d8 growth is attributable to
-    * measured pair explosion vs iteration overhead, not guessed.
+    * measured pair explosion vs iteration overhead, not guessed. A
+    * diagnostic record, not a memo: reading it skips no work, so it
+    * stays a plain map outside [[StageCache]].
     */
   private val ccStatsByDir =
     new java.util.concurrent.ConcurrentHashMap[

@@ -66,14 +66,14 @@ object MediaQueries {
   private[queries] val V9CentroidDir = "localdata/v9-centroids"
   private[queries] val V23ResCbDir = "localdata/v23-rescodebook"
 
-  /** Session-memoized exact integer fingerprint of the embeddings corpus
-    * (the g6 recipe — [[SamplingQueries.g6CorpusFp]]). */
+  /** Memoized exact integer fingerprint of the embeddings corpus (the g6
+    * recipe — [[SamplingQueries.g6CorpusFp]]). */
   private[queries] def embCorpusFp(s: SparkSession, dir: String): Long =
-    StageCache.getOrCache(s, s"emb_corpus_fp:$dir") {
-      import s.implicits._
-      Seq(SamplingQueries.g6CorpusFp(Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding")))).toDF("v")
-    }.head().getLong(0)
+    StageCache.memo[java.lang.Long](s"emb_corpus_fp:$dir",
+        Seq(s"$dir/embeddings.parquet")) {
+      java.lang.Long.valueOf(SamplingQueries.g6CorpusFp(
+        Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))))
+    }
 
   private def writeCentroidArtifact(s: SparkSession, dir: String,
       q: Ivf.Quantizer, artDir: String): Unit = {
@@ -117,33 +117,26 @@ object MediaQueries {
   // (parquet float/double), so artifacts are byte-identical whether a
   // pass trained or loaded.
 
-  private[queries] val trainedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
-
   private def acquireTrained[T <: AnyRef](s: SparkSession, artDir: String,
       dir: String, knobs: String)(train: => T)(write: T => Unit)(
-      load: Long => T): T = {
-    val fp = embCorpusFp(s, dir)
-    val key = s"$artDir|$fp|$knobs"
-    val hit = trainedMemo.get(key)
-    if (hit != null) return hit.asInstanceOf[T]
-    val sidecar = new java.io.File(artDir, s"_knobs_$fp.txt")
-    val part = new java.io.File(artDir, s"corpus_fp=$fp")
-    val fresh = sidecar.isFile && part.isDirectory &&
-      new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
-        "UTF-8") == knobs
-    val t: T =
+      load: Long => T): T =
+    StageCache.memo(s"trained:$artDir|$dir|$knobs",
+        Seq(s"$dir/embeddings.parquet")) {
+      val fp = embCorpusFp(s, dir)
+      val sidecar = new java.io.File(artDir, s"_knobs_$fp.txt")
+      val part = new java.io.File(artDir, s"corpus_fp=$fp")
+      val fresh = sidecar.isFile && part.isDirectory &&
+        new String(java.nio.file.Files.readAllBytes(sidecar.toPath),
+          "UTF-8") == knobs
       if (fresh) load(fp)
       else {
         java.nio.file.Files.deleteIfExists(sidecar.toPath)
-        val t0 = train
-        write(t0)
+        val t = train
+        write(t)
         java.nio.file.Files.write(sidecar.toPath, knobs.getBytes("UTF-8"))
-        t0
+        t
       }
-    trainedMemo.put(key, t)
-    t
-  }
+    }
 
   private[queries] def loadCentroidArtifact(s: SparkSession, artDir: String,
       fp: Long): Ivf.Quantizer = {
@@ -572,10 +565,14 @@ object MediaQueries {
       Pq.trainResidual(sm, q, m = PqM, ksub = PqKsub))(
       writeCodebookArtifact(s, dir, _, V23ResCbDir))(
       loadCodebookArtifact(s, V23ResCbDir, _))
+    // the recall legs below fork over both index stages: materialize
+    // them first, or cold concurrent legs each compute their blocks
     val plainIdx = StageCache.getOrCache(s, s"ivfpq_index:$dir",
-      annIndexFingerprint(dir))(buildIvfPqIndex(s, dir, q, cbPlain))
+      annIndexFingerprint(dir), materialize = true)(
+      buildIvfPqIndex(s, dir, q, cbPlain))
     val resIdx = StageCache.getOrCache(s, s"ivfpq_res_index:$dir",
-      annIndexFingerprint(dir))(buildIvfPqResIndex(s, dir, q, cbRes))
+      annIndexFingerprint(dir), materialize = true)(
+      buildIvfPqResIndex(s, dir, q, cbRes))
     val query = e.filter(col("vec_id") === 0)
       .head().getAs[scala.collection.Seq[Float]]("vector").toArray
     val exact = graft.search.VectorSearch

@@ -1,5 +1,10 @@
 package graft.queries
 
+import java.util.concurrent.{Callable, ExecutionException,
+  ExecutorCompletionService, Executors, Future, TimeUnit}
+
+import org.apache.spark.sql.graft.JobTags
+
 /** Overlap independent driver-orchestrated legs (guide §2.6 "overlap
   * independent jobs"): Spark's scheduler happily runs several jobs at
   * once inside one application — actions are only sequential because
@@ -13,25 +18,34 @@ private[queries] object Overlap {
 
   /** Unwrap ExecutionException so a leg's real failure class (what the
     * bench/Verify artifacts record) survives the thread hop. */
-  private def awaitGet[T](f: java.util.concurrent.Future[T]): T =
+  private def awaitGet[T](f: Future[T]): T =
     try f.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException => throw e.getCause
-    }
+    catch { case e: ExecutionException => throw e.getCause }
 
   /** Run `legs` concurrently on a bounded pool (2-3 in flight is plenty
     * — enough to fill each job's tail, not so many that they fight for
-    * executors), returning results in input order. */
+    * executors), returning results in input order. The first leg to
+    * fail stops the rest: queued legs never start, running ones are
+    * interrupted, and their Spark jobs (tagged per call) are cancelled
+    * before that leg's own exception is rethrown. */
   def all[T](legs: Seq[() => T], parallelism: Int = 3): Seq[T] = {
     if (legs.size <= 1) return legs.map(_())
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(parallelism, legs.size))
+    val tag = s"graft-overlap-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(math.min(parallelism, legs.size))
+    val done = new ExecutorCompletionService[T](pool)
+    val fs = legs.map(l => done.submit(new Callable[T] {
+      def call(): T = JobTags.tagged(tag)(l())
+    }))
     try {
-      val fs = legs.map(l =>
-        pool.submit(new java.util.concurrent.Callable[T] {
-          def call(): T = l()
-        }))
-      fs.map(awaitGet)
+      legs.foreach(_ => awaitGet(done.take()))
+      fs.map(_.get())
+    } catch {
+      case e: Throwable =>
+        fs.foreach(_.cancel(true))
+        pool.shutdownNow()
+        pool.awaitTermination(60, TimeUnit.SECONDS)
+        JobTags.cancel(tag, "an overlapped sibling leg failed")
+        throw e
     } finally pool.shutdown()
   }
 

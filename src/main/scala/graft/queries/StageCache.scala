@@ -3,39 +3,89 @@ package graft.queries
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memo for cache()'d shared query stages.
+/** The process's one memo, for cached shared query stages and for
+  * plain values derived from source files.
   *
-  * Catalog queries materialize expensive sketch stages with `.cache()` (the
-  * local stand-in for a write-time table column) and share them across
-  * queries (d2/d3 share one MinHash pass). A bare process-global map would
-  * pin executor storage and retain stopped SparkSessions for the JVM
-  * lifetime; this registry instead:
+  *  - [[getOrCache]]: `persist()`ed stages (MEMORY_AND_DISK) keyed by
+  *    (session, key), shared across catalog queries (d2/d3 share one
+  *    MinHash pass) until [[release]] for that session — called by
+  *    Verify / Bench / Cli, and on application end.
+  *  - [[memo]]: values keyed by name (a stats row, a query literal, a
+  *    trained quantizer, a temp index dir), served only while the
+  *    (relative path, length, mtime) stamp of their source files is the
+  *    one they were built under. [[release]] drops them all.
   *
-  *  - keys by (session, stage key) and evicts+unpersists everything for a
-  *    session via [[release]] (called by Verify / Bench / Cli when done);
-  *  - drops a session's entries automatically once its context ends, so
-  *    long-lived multi-session JVMs don't accumulate dead references.
-  *
-  * Storage level is conf-gated: `spark.graft.stageCache.storageLevel`
-  * (default MEMORY_AND_DISK — Dataset.cache()'s level). A 126-query
-  * catalog's resident set is whatever the catalog touched; setting
-  * MEMORY_AND_DISK_SER trades CPU (serde on re-read) for a several-×
-  * smaller deserialized footprint, the standard lever when cached stages
-  * start evicting each other. Any `StorageLevel.fromString` name is
-  * accepted.
+  * Both use one single-flight get-or-build: look up, take the key's
+  * lock, look up again, build outside any map operation (builders nest
+  * lookups: doc_bigrams → doc_words), then publish. A dropped value is
+  * unpersisted or, if [[AutoCloseable]], closed — also at JVM exit.
   */
 object StageCache {
 
-  private val stages =
-    new ConcurrentHashMap[(SparkSession, String), DataFrame]
+  /** One key's value with the stamp it was built under; its monitor is
+    * the key's build lock. */
+  private final class Slot { @volatile var entry: (String, AnyRef) = _ }
+
+  /** (session, stage key) → stage; memo key (a String) → value. */
+  private val slots = new ConcurrentHashMap[Any, Slot]
 
   private val hooked = ConcurrentHashMap.newKeySet[SparkSession]()
 
-  /** Conf key for the persist level of every cached stage. */
-  val StorageLevelConf = "spark.graft.stageCache.storageLevel"
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    slots.forEach((k, sl) => if (k.isInstanceOf[String]) dispose(sl.entry))))
+
+  private def dispose(e: (String, AnyRef)): Unit =
+    try e match {
+      case (_, c: AutoCloseable) => c.close()
+      case (_, df: Dataset[_]) => df.unpersist()
+      case _ => ()
+    } catch { case _: Throwable => () }
+
+  private def singleFlight(key: Any, stamp: String)(build: => AnyRef)
+      : AnyRef = {
+    val slot = slots.computeIfAbsent(key, _ => new Slot)
+    def current: AnyRef = slot.entry match {
+      case (st, v) if st == stamp => v
+      case _ => null
+    }
+    val hit = current
+    if (hit != null) hit
+    else slot.synchronized {
+      val again = current
+      if (again != null) again
+      // released while this caller waited: build into the live slot
+      else if (slots.get(key) ne slot) singleFlight(key, stamp)(build)
+      else {
+        val v = build
+        val old = slot.entry
+        slot.entry = (stamp, v)
+        if (old != null) dispose(old)
+        v
+      }
+    }
+  }
+
+  /** `compute` for `key`, recomputed whenever a file under `sources`
+    * changes path, length or mtime. The stamp is in-process only:
+    * persisted artifacts keep the [[sourceFingerprint]] contract. */
+  def memo[T <: AnyRef](key: String, sources: Seq[String])(
+      compute: => T): T =
+    singleFlight(key, sources.map(d => walk(new java.io.File(d), "",
+      f => s"${f.length}:${f.lastModified}").sorted.mkString(","))
+      .mkString("|"))(compute).asInstanceOf[T]
+
+  /** `rel:stat` for every file under `f` (`f` itself when it is a file,
+    * whatever its name), skipping `_`-prefixed metadata children. */
+  private def walk(f: java.io.File, rel: String,
+      stat: java.io.File => String): Seq[String] =
+    if (f.isFile) Seq(s"$rel:${stat(f)}")
+    else Option(f.listFiles()).toSeq.flatten
+      .filterNot(_.getName.startsWith("_"))
+      .flatMap(c => walk(c, if (rel.isEmpty) c.getName
+                            else s"$rel/${c.getName}", stat))
 
   /** Conf key for the write-time table root. When set and
     * `<root>/<sanitized key>` holds a committed parquet table (the
@@ -55,10 +105,11 @@ object StageCache {
     key.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** A fingerprint of a source table directory: sorted (name, size) of
-    * its data files. Cheap (pure filesystem stat) and catches the
-    * driver's between-round testdata regeneration — the trap that
-    * silently served stale events encodings before EventsEncodingSpec.
-    * Callers include their derivation constants (shingle n, k, …) so a
+    * its data files — the persisted-table and artifact freshness
+    * contract. Cheap (pure filesystem stat) and catches a regeneration
+    * that changes a file's name or size, but NOT a same-size rewrite;
+    * in-process values use [[memo]]'s mtime stamp instead. Callers
+    * include their derivation constants (shingle n, k, …) so a
     * parameter change also invalidates.
     */
   def sourceFingerprint(dirs: Seq[String], params: String): String = {
@@ -79,15 +130,9 @@ object StageCache {
     * tables, where a flat listing sees only the partition DIRECTORIES
     * and is blind to rewrites inside them. Metadata-only — a file-tree
     * walk, zero data read. */
-  def treeFingerprint(dir: String, params: String): String = {
-    def walk(f: java.io.File, rel: String): Seq[String] =
-      if (f.isFile) Seq(s"$rel:${f.length}")
-      else Option(f.listFiles()).toSeq.flatten
-        .filterNot(_.getName.startsWith("_"))
-        .flatMap(c => walk(c, if (rel.isEmpty) c.getName
-                              else s"$rel/${c.getName}"))
-    s"$params|${walk(new java.io.File(dir), "").sorted.mkString(",")}"
-  }
+  def treeFingerprint(dir: String, params: String): String =
+    s"$params|${walk(new java.io.File(dir), "", _.length.toString)
+      .sorted.mkString(",")}"
 
   private def metaFile(dir: java.io.File) =
     new java.io.File(dir, "_graft_fingerprint")
@@ -195,57 +240,30 @@ object StageCache {
       fingerprint: Option[String] = None)(build: => DataFrame): DataFrame =
     persistedTable(s, key, fingerprint).getOrElse(build)
 
-  private def levelOf(s: SparkSession): StorageLevel = {
-    val name = s.conf.get(StorageLevelConf, "MEMORY_AND_DISK")
-    try StorageLevel.fromString(name)
-    catch { case _: IllegalArgumentException => StorageLevel.MEMORY_AND_DISK }
-  }
-
+  /** The cached stage for `key`: the fresh persisted table under
+    * [[PathConf]] if any (still persisted, so consumers share one IO
+    * pass), else `build`. With `materialize`, the call that registers it
+    * also computes its blocks: legs that fork over a shared stage need
+    * this first, or each cold concurrent job computes them (a cold v16
+    * read 1012 corpus rows instead of 516). */
   def getOrCache(s: SparkSession, key: String,
-      fingerprint: Option[String] = None)(build: => DataFrame): DataFrame = {
+      fingerprint: Option[String] = None, materialize: Boolean = false)(
+      build: => DataFrame): DataFrame = {
     if (hooked.add(s)) {
       s.sparkContext.addSparkListener(new SparkListener {
         override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
           release(s)
       })
     }
-    val k = (s, key)
-    val existing = stages.get(k)
-    if (existing != null) existing
-    else {
-      // build OUTSIDE the map update: stage builders recursively call
-      // getOrCache for their dependency stages (doc_bigrams → doc_words,
-      // lang_votes → doc_words), and ConcurrentHashMap forbids reentrant
-      // modification from inside computeIfAbsent — the JDK throws
-      // IllegalStateException("Recursive update") when the two keys land
-      // in the same bin, a nondeterministic (identity-hash-dependent)
-      // crash. get-then-putIfAbsent allows the nesting; on the (benign)
-      // race a loser's cache mark is unpersisted before anything
-      // materializes it.
-      // Write-time table read-through: a persisted copy of this stage
-      // replaces the compute plan (the scan is still persisted at the
-      // session level so the many consumer actions share one IO pass).
-      val built = persistedTable(s, key, fingerprint).getOrElse(build)
-        .persist(levelOf(s))
-      val prev = stages.putIfAbsent(k, built)
-      if (prev != null) {
-        try built.unpersist() catch { case _: Throwable => () }
-        prev
-      } else built
-    }
+    singleFlight((s, key), "") {
+      val df = persistedTable(s, key, fingerprint).getOrElse(build)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      if (materialize)
+        try df.write.mode("overwrite").format("noop").save()
+        catch { case e: Throwable => df.unpersist(); throw e }
+      df
+    }.asInstanceOf[DataFrame]
   }
-
-  /** True iff `key` is already registered for `s` — i.e. some consumer
-    * already built (and, in the action-follows-build pattern every
-    * catalog query has, materialized) the cached stage. Overlapped legs
-    * use this to decide whether a shared dependency needs one
-    * materializing pass BEFORE they fork — two concurrent jobs over an
-    * unmaterialized cached stage otherwise both compute its blocks and
-    * scan the source twice (r16: the VolumeEnvelopeGen cold measure of
-    * v16 read 1012 corpus rows instead of 516 without this).
-    */
-  def contains(s: SparkSession, key: String): Boolean =
-    stages.containsKey((s, key))
 
   /** Bytes (memory + disk) currently held by cached RDDs in `s`'s
     * context — the stage cache's residency plus any other caching the
@@ -256,20 +274,22 @@ object StageCache {
     try s.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
     catch { case _: Throwable => -1L }
 
-  /** Unpersist and forget every cached stage owned by `s`. Logs the
-    * released residency so a long-lived JVM's cache growth is observable
-    * instead of inferred (the r7 bench-inflation question).
+  /** Unpersist and forget every cached stage owned by `s`, and drop
+    * every [[memo]] entry. Logs the released residency so a long-lived
+    * JVM's cache growth is observable instead of inferred (the r7
+    * bench-inflation question).
     */
   def release(s: SparkSession): Unit = {
     val before = storageBytes(s)
     var n = 0
-    val it = stages.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 eq s) {
-        try e.getValue.unpersist() catch { case _: Throwable => () }
-        it.remove()
-        n += 1
+    slots.forEach { (k, slot) =>
+      val stage = k.isInstanceOf[(_, _)]
+      val mine = k match { case (o: SparkSession, _) => o eq s; case _ => true }
+      if (mine && slots.remove(k, slot)) slot.synchronized {
+        if (slot.entry != null) {
+          dispose(slot.entry); slot.entry = null
+          if (stage) n += 1
+        }
       }
     }
     hooked.remove(s)

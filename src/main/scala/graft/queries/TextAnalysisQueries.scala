@@ -34,8 +34,9 @@ object TextAnalysisQueries {
     * chain = ~11 splits per row). At scale this is a write-time column;
     * StageCache is its local stand-in (released on session end).
     */
-  private[queries] def wordsStage(s: SparkSession, dir: String): DataFrame =
-    StageCache.getOrCache(s, s"doc_words:$dir") {
+  private[queries] def wordsStage(s: SparkSession, dir: String,
+      materialize: Boolean = false): DataFrame =
+    StageCache.getOrCache(s, s"doc_words:$dir", materialize = materialize) {
       Tables.spread(s, Tables.documents(s, dir))
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),
           words(col("text")).as("w"),
@@ -63,15 +64,6 @@ object TextAnalysisQueries {
           .as("tc"))
         .select(col("doc_id"), col("tc.tok").as("tok"), col("tc.c").as("c"))
     }
-
-  /** Materialize the shared token stage if no consumer has built it yet:
-    * overlapped legs (v14/v16/v24) both depend on it, and two concurrent
-    * cold jobs over an unmaterialized cached stage each compute its
-    * blocks — one corpus scan becomes two (see [[StageCache.contains]]).
-    * Warm sessions skip straight through. */
-  private[queries] def ensureWordsStage(s: SparkSession, dir: String): Unit =
-    if (!StageCache.contains(s, s"doc_words:$dir"))
-      wordsStage(s, dir).write.mode("overwrite").format("noop").save()
 
   /** Count of tokens present in a fixed word list (int — order-free). */
   private def voteCount(w: Column, list: Seq[String]): Column =
@@ -1273,18 +1265,15 @@ object TextAnalysisQueries {
 
   /** The 1-row corpus-stats record (n, sum_dl, df_<term>…), read through
     * the persisted stats table when `index-sketches` wrote it — shared
-    * by [[bm25ScoredAll]] and v24's fusion-gate confidence. */
-  // r16: process-memoized under the source fingerprint — every
-  // BM25-scored query path (x22/x25/x26/v14/v16/v24) re-ran the head()
-  // job per call; the row is a pure function of corpus + constants (=
-  // the fingerprint), so one driver job per corpus serves them all.
-  private val statsRowMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.Row]
+    * by [[bm25ScoredAll]] and v24's fusion-gate confidence. Memoized:
+    * every BM25-scored path (x22/x25/x26/v14/v16/v24) needs it, and
+    * each read is a Spark job. */
   private[queries] def bm25StatsRow(s: SparkSession, dir: String)
       : org.apache.spark.sql.Row =
-    statsRowMemo.computeIfAbsent(s"$dir|${bm25Fingerprint(dir).get}",
-      _ => StageCache.readThroughOrBuild(s, s"bm25_stats:$dir",
-        bm25Fingerprint(dir))(bm25StatsDf(s, dir)).head())
+    StageCache.memo(s"bm25_stats:$dir", Seq(s"$dir/documents.parquet")) {
+      StageCache.readThroughOrBuild(s, s"bm25_stats:$dir",
+        bm25Fingerprint(dir))(bm25StatsDf(s, dir)).head()
+    }
 
   /** The BM25 query-term list, in scoring order (v24's confidence fold
     * replays it term-by-term). */

@@ -593,7 +593,7 @@ object VectorQueries {
     // order — the unchanged DuckDB oracle keeps pinning that.
     // The legs share the token stage: materialize it once BEFORE the
     // fork, or two cold jobs each compute its blocks (double scan).
-    TextAnalysisQueries.ensureWordsStage(s, dir)
+    TextAnalysisQueries.wordsStage(s, dir, materialize = true)
     val lex = TextAnalysisQueries.bm25ScoredAll(s, dir)
     val vec = hybridCosAll(s, dir)
     def chan(full: DataFrame, score: String, ch: Int): DataFrame =
@@ -697,7 +697,7 @@ object VectorQueries {
     // r16: the two candidate scans are independent — overlap them
     // (guide §2.6) instead of paying two full job latencies in series.
     // Their shared token stage materializes once before the fork.
-    TextAnalysisQueries.ensureWordsStage(s, dir)
+    TextAnalysisQueries.wordsStage(s, dir, materialize = true)
     val (lexIds, vecIds) = Overlap.par2(
       TextAnalysisQueries.bm25ScoredAll(s, dir)
         .orderBy(col("bm25").desc, col("doc_id"))
@@ -858,7 +858,7 @@ object VectorQueries {
     // The shared 1-row corpus stats and the token stage materialize
     // FIRST so the legs read session-cached state instead of racing to
     // build it (a cold race would double-scan the corpus).
-    TextAnalysisQueries.ensureWordsStage(s, dir)
+    TextAnalysisQueries.wordsStage(s, dir, materialize = true)
     val st = TextAnalysisQueries.bm25StatsRow(s, dir)
     val n = st.getAs[Long]("n")
     // confidence: idf folded in the fixed query-term order, df=0 → 0
@@ -1092,37 +1092,15 @@ object VectorQueries {
       s"$base/idx", numShards = 2)
   }
 
-  /** Process-wide memo of the TEMP-dir artifacts for the no-stage-cache
-    * path, keyed by artifact name → (fingerprint, dir). One bench run
-    * times the catalog N times and serves v18/v19 (HNSW) and v20 (IVF)
-    * from the same indexes — without the memo every timed serving query
-    * paid a full stage+build (~2 s) that the read-through number then
-    * subtracted back out (ADVICE r10). A dir is replaced when its
-    * fingerprint changes and removed on JVM exit; only SUCCESSFUL
-    * builds are memoized. */
-  private val tmpArtifacts =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-  private val tmpArtifactLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private object TmpArtifactCleanup {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpArtifacts.values.forEach(fd =>
-        graft.ingest.TableSwap.rmTreeAt(fd._2))))
-    /** Per-NAME build lock: independent artifacts (the v18 graph, the
-      * v20 IVF table) may build concurrently; two racers for the same
-      * name still serialize so only one temp build is memoized. */
-    def lockFor(name: String): Object =
-      tmpArtifactLocks.computeIfAbsent(name, _ => new Object)
-  }
-
   /** Acquire a serving artifact (a DIRECTORY of index state, not one
     * parquet table): write-time under the stage-cache root when
     * configured (the production shape — the read-through bench measures
-    * the walk/probe only), else the process-memoized temp build.
-    * Returns its base dir; callers must NOT delete it (the cache/memo
-    * owns cleanup). */
-  private def acquireArtifact(s: SparkSession, name: String, fp: String)(
-      build: String => Unit): String = {
+    * the walk/probe only), else a memoized temp build, so repeated
+    * serves (one bench run times the catalog N times over v18–v25) pay
+    * the ~2 s stage+build once. Returns its base dir;
+    * callers must NOT delete it (the cache/memo owns cleanup). */
+  private def acquireArtifact(s: SparkSession, dir: String, name: String,
+      fp: String)(build: String => Unit): String = {
     s.conf.getOption(StageCache.PathConf)
       .map(r => new java.io.File(r, name)) match {
       case Some(d) =>
@@ -1145,54 +1123,49 @@ object VectorQueries {
           }
         }
         d.toString
-      case None => TmpArtifactCleanup.lockFor(name).synchronized {
-        Option(tmpArtifacts.get(name)) match {
-          case Some((f, d)) if f == fp => d
-          case old =>
-            old.foreach { case (_, d) =>
-              graft.ingest.TableSwap.rmTreeAt(d)
-            }
-            tmpArtifacts.remove(name)
-            val t = java.nio.file.Files.createTempDirectory(name).toString
-            // Throwable, not Exception: an OOM out of an index build
-            // must not leak a temp copy of the embeddings table
-            try build(t)
-            catch {
-              case e: Throwable =>
-                graft.ingest.TableSwap.rmTreeAt(t); throw e
-            }
-            tmpArtifacts.put(name, (fp, t))
-            t
-        }
-      }
+      case None =>
+        StageCache.memo(s"artifact:$name:$dir",
+            Seq(s"$dir/embeddings.parquet")) {
+          val t = new TempDir(name)
+          // Throwable, not Exception: an OOM out of an index build
+          // must not leak a temp copy of the embeddings table
+          try build(t.path)
+          catch { case e: Throwable => t.close(); throw e }
+          t
+        }.path
     }
+  }
+
+  /** A temp directory that [[StageCache]] removes when it drops it. */
+  private final class TempDir(prefix: String) extends AutoCloseable {
+    val path: String = java.nio.file.Files.createTempDirectory(prefix).toString
+    def close(): Unit = graft.ingest.TableSwap.rmTreeAt(path)
   }
 
   /** The v18/v19 HNSW serving artifact (staged embeddings + index). */
   private def acquireHnswArtifact(s: SparkSession, dir: String): String =
-    acquireArtifact(s, "v18_hnsw", v18IndexFingerprint(dir))(
+    acquireArtifact(s, dir, "v18_hnsw", v18IndexFingerprint(dir))(
       buildV18Index(s, dir, _))
 
   /** The vec_id 0 query embedding as a SQL float-array literal —
     * Float.toString round-trips exactly through the DOUBLE parse +
     * float CAST, so the text reproduces the stored vector bit-for-bit.
-    * One copy shared by every SQL serving query (v18/v19/v20). r16:
-    * process-memoized under the source-file fingerprint (the
-    * tmpArtifacts discipline) — every serving leg needed the literal
-    * and each head() was a full driver job; the v18–v25 family pays it
-    * once per corpus now. */
-  private val qVecMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]
-  private val stagedCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+    * One copy shared by every SQL serving query (v18/v19/v20), memoized:
+    * each head() is a Spark job. */
   private def queryVecLiteral(s: SparkSession, dir: String): String =
-    qVecMemo.computeIfAbsent(
-      StageCache.sourceFingerprint(Seq(s"$dir/embeddings.parquet"),
-        s"qvec:$dir"),
-      _ => Tables.embeddings(s, dir).filter(col("vec_id") === 0)
+    StageCache.memo(s"qvec:$dir", Seq(s"$dir/embeddings.parquet")) {
+      Tables.embeddings(s, dir).filter(col("vec_id") === 0)
         .select(col("embedding")).head().getSeq[Float](0)
         .map(_.toString)
-        .mkString("CAST(array(", ", ", ") AS array<float>)"))
+        .mkString("CAST(array(", ", ", ") AS array<float>)")
+    }
+
+  /** Row count of an artifact's staged table — the exactness-witness
+    * ef (≥ every shard size), memoized under the staged files. */
+  private def stagedCount(s: SparkSession, base: String): Int =
+    StageCache.memo[java.lang.Long](s"staged_n:$base/emb", Seq(s"$base/emb")) {
+      java.lang.Long.valueOf(s.read.parquet(s"$base/emb").count())
+    }.toInt
 
   /** The (rank, fragment_id, <witness>) output shape shared by the SQL
     * serving queries: ranked hits plus the plan-read witness bit under
@@ -1228,12 +1201,7 @@ object VectorQueries {
       sqlText: (String, String) => String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.graft.HnswIndexRewrite
     val staged = s.read.parquet(s"$base/emb")
-    // r16: the exactness-witness ef (= staged row count) is a property
-    // of the artifact's files — memoize the count job under their stat
-    // fingerprint instead of re-running it per serve
-    val efVal = ef.getOrElse(stagedCountMemo.computeIfAbsent(
-      StageCache.sourceFingerprint(Seq(s"$base/emb"), "n"),
-      _ => java.lang.Long.valueOf(staged.count())).toInt)
+    val efVal = ef.getOrElse(stagedCount(s, base))
     val qLit = queryVecLiteral(s, dir)
     val view = s"v18_emb_${java.util.UUID.randomUUID().toString.take(8)}"
     s.conf.set(HnswIndexRewrite.IndexKey, s"$base/idx")
@@ -1333,7 +1301,7 @@ object VectorQueries {
 
   private val v20IvfSqlDistance: Q = (s, dir) => {
     import org.apache.spark.sql.graft.AnnProbeRewrite
-    val base = acquireArtifact(s, "v20_ivf", v20IndexFingerprint(dir))(
+    val base = acquireArtifact(s, dir, "v20_ivf", v20IndexFingerprint(dir))(
       buildV20Index(s, dir, _))
     val qLit = queryVecLiteral(s, dir)
     s.conf.set(AnnProbeRewrite.QuantizerKey, s"$base/quantizer.txt")
@@ -1481,12 +1449,10 @@ object VectorQueries {
 
   private val v25RoutedMaintainedServe: Q = (s, dir) => {
     import org.apache.spark.sql.graft.HnswIndexRewrite
-    val base = acquireArtifact(s, "v25_hnsw_routed_maint",
+    val base = acquireArtifact(s, dir, "v25_hnsw_routed_maint",
       v25IndexFingerprint(dir))(buildV25RoutedIndex(s, dir, _))
     val staged = s.read.parquet(s"$base/emb")
-    val efVal = stagedCountMemo.computeIfAbsent(
-      StageCache.sourceFingerprint(Seq(s"$base/emb"), "n"),
-      _ => java.lang.Long.valueOf(staged.count())).toInt
+    val efVal = stagedCount(s, base)
     val qLit = queryVecLiteral(s, dir)
     val view = s"v25_emb_${java.util.UUID.randomUUID().toString.take(8)}"
     s.conf.set(HnswIndexRewrite.IndexKey, s"$base/idx")
@@ -1535,7 +1501,7 @@ object VectorQueries {
   }
 
   private val v21HnswMaintainedServe: Q = (s, dir) => {
-    val base = acquireArtifact(s, "v21_hnsw_maint",
+    val base = acquireArtifact(s, dir, "v21_hnsw_maint",
       v21IndexFingerprint(dir))(buildV21Index(s, dir, _))
     serveHnswSqlAt(s, base, dir, ef = None) { (view, qLit) =>
       s"""SELECT fragment_id,
@@ -1568,8 +1534,7 @@ object VectorQueries {
     val ivfNprobe = 8
     // exact top-k over the served corpus: the recall denominator. Same
     // staged table the HNSW artifact serves (raw embeddings + label).
-    val hnswBase = acquireArtifact(s, "v18_hnsw", v18IndexFingerprint(dir))(
-      buildV18Index(s, dir, _))
+    val hnswBase = acquireHnswArtifact(s, dir)
     val qLit = queryVecLiteral(s, dir)
     def topIds(df: org.apache.spark.sql.DataFrame): Seq[String] =
       df.select(col("fragment_id")).collect().map(_.getString(0)).toSeq
@@ -1594,7 +1559,7 @@ object VectorQueries {
     val hnswWalked = hnswDf.select(col("used_index_walk"))
       .head().getBoolean(0)
     // IVF leg at nprobe = 8 of 16 lists, same artifact + rule as v20
-    val ivfBase = acquireArtifact(s, "v20_ivf", v20IndexFingerprint(dir))(
+    val ivfBase = acquireArtifact(s, dir, "v20_ivf", v20IndexFingerprint(dir))(
       buildV20Index(s, dir, _))
     s.conf.set(AnnProbeRewrite.QuantizerKey, s"$ivfBase/quantizer.txt")
     s.conf.set(AnnProbeRewrite.NprobeKey, ivfNprobe.toString)
@@ -1621,7 +1586,7 @@ object VectorQueries {
     // on from the staged corpus (the v15 metadata-join pattern);
     // witness = the routed scan partition-pruned on shard_id.
     val routedR = 6
-    val routedBase = acquireArtifact(s, "v22_routed",
+    val routedBase = acquireArtifact(s, dir, "v22_routed",
       v22RoutedFingerprint(dir))(buildV22RoutedIndex(s, dir, _))
     val router = graft.search.Ivf.load(s"$routedBase/idx.router.txt")
     val qVec = Tables.embeddings(s, dir).filter(col("vec_id") === 0)

@@ -185,23 +185,13 @@ object AnnProbeRewrite {
   val QuantizerKey = "spark.graft.ann.quantizer"
   val NprobeKey = "spark.graft.ann.nprobe"
 
-  /** (mtime, size)-keyed quantizer cache: the rule fires per query
-    * compilation, the sidecar parse should not. mtime alone is not a safe
-    * freshness key — filesystem mtime granularity can be a full second, so
-    * a sidecar rewritten twice within one tick would keep serving the
-    * stale parse; size breaks the tie for any content change that moves a
-    * byte count (and a same-size same-mtime rewrite is caught by the
-    * ivf_q_hash runtime guard above).
-    */
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    String, ((Long, Long), graft.search.Ivf.Quantizer)]()
-
-  private[graft] def quantizer(path: String): graft.search.Ivf.Quantizer = {
-    val p = java.nio.file.Paths.get(path)
-    val key = (java.nio.file.Files.getLastModifiedTime(p).toMillis,
-      java.nio.file.Files.size(p))
-    cache.compute(path, (_, old) =>
-      if (old != null && old._1 == key) old
-      else (key, graft.search.Ivf.load(path)))._2
-  }
+  /** The sidecar quantizer, memoized: the rule fires per query
+    * compilation, the sidecar parse should not. The memo's (length,
+    * mtime) stamp reloads on any rewrite that moves either (a same-size
+    * same-mtime rewrite is caught by the ivf_q_hash runtime guard
+    * above). */
+  private[graft] def quantizer(path: String): graft.search.Ivf.Quantizer =
+    graft.queries.StageCache.memo(s"quantizer:$path", Seq(path)) {
+      graft.search.Ivf.load(path)
+    }
 }
